@@ -8,18 +8,18 @@ formula in float32 (k1=1.2, b=0.75, no (k1+1) numerator):
     idf   = sum over query terms of ln(1 + (N - df_t + 0.5) / (df_t + 0.5))
     score = idf * tf / (tf + k1 * (1 - b + b * dl / avgdl))
 
-Exact phrases count match start positions; a phrase that repeats one
-term m times counts disjoint runs (floor(run / m)), the engine's
-documented same-term semantics. Phrases that mix repeated and distinct
-terms are never generated, so no other rule is needed.
+Exact phrases count match start positions. A phrase that repeats one
+term follows the engine's same-term rule, which is the reference's
+``bigram_freqs._adj_to_phrase_freq`` (``searcharray_spark/kernels.py``
+``_phrase_step``; SURVEY.md, operator PH2):
 
-Known divergence: for a two-term same-term phrase (``the the``) the
-engine counts, per 18-position block of its packed layout, adjacent pairs
-minus ceil(triples / 2), plus one per pair straddling two blocks. That
-equals disjoint-run counting only when a block holds at most one
-odd-length run and no run crosses a block boundary.
-``phrase_freq(..., block_split=True)`` computes the packed count, so the
-check can tell this one divergence apart from any other wrong answer.
+- two terms (``the the``): per 18-position block of the packed layout,
+  adjacent pairs minus ceil(triples / 2), plus one per pair straddling
+  two blocks;
+- more terms: disjoint runs, floor(run / m).
+
+Phrases that mix repeated and distinct terms are never generated, so no
+other rule is needed.
 """
 from __future__ import annotations
 
@@ -89,14 +89,13 @@ class Corpus:
             self._df[term] = int(np.count_nonzero(self.tf(term)))
         return self._df[term]
 
-    def phrase_freq(self, terms: Sequence[str],
-                    block_split: bool = False) -> np.ndarray:
+    def phrase_freq(self, terms: Sequence[str]) -> np.ndarray:
         ids = [self._tid(t) for t in terms]
         m = len(ids)
         if min(ids) < 0:
             return np.zeros(self.n, dtype=np.int64)
         if len(set(ids)) == 1:
-            if block_split and m == 2:
+            if m == 2:
                 return self._packed_pairs(ids[0])
             return self._run_freq(ids[0], m)
         if len(set(ids)) != m:
@@ -123,9 +122,8 @@ class Corpus:
                            minlength=self.n).astype(np.int64)
 
     def _packed_pairs(self, tid: int) -> np.ndarray:
-        """Same-term pair count as the packed layout computes it: per
-        18-position block, adjacent pairs minus ceil(triples / 2), plus
-        every pair straddling two blocks."""
+        """Same-term pair count: per 18-position block, adjacent pairs
+        minus ceil(triples / 2), plus every pair straddling two blocks."""
         pos = np.flatnonzero(self.tokens == tid)
         out = np.zeros(self.n, dtype=np.int64)
         if len(pos) < 2:
@@ -146,11 +144,11 @@ class Corpus:
         return out
 
     # --- scoring -----------------------------------------------------------
-    def scores(self, terms: Sequence[str], block_split: bool = False) -> np.ndarray:
+    def scores(self, terms: Sequence[str]) -> np.ndarray:
         """float32 BM25 per doc for a term (len 1) or an exact phrase."""
         terms = list(terms)
         freq = (self.tf(terms[0]) if len(terms) == 1
-                else self.phrase_freq(terms, block_split))
+                else self.phrase_freq(terms))
         out = np.zeros(self.n, dtype=np.float32)
         m = freq > 0
         out[m] = bm25(freq[m], [self.df(t) for t in terms], self.lens[m],

@@ -54,18 +54,16 @@ def test_phrase_never_straddles_docs():
     assert c.phrase_freq(["foo", "bar"]).tolist() == [0, 0]
 
 
-def test_packed_pairs_count():
-    # run 16,17 | 18 crosses a block boundary: disjoint runs give 1,
-    # the packed count gives 1 (inner pair) + 1 (straddling pair)
+def test_same_term_pairs_follow_packed_blocks():
+    # run 16,17 | 18 crosses a block boundary: one inner pair plus one
+    # pair straddling the two blocks
     toks = ["x"] * 16 + ["the"] * 3 + ["x"]
     c = oracle.Corpus([0], [" ".join(toks)])
-    assert c.phrase_freq(["the", "the"]).tolist() == [1]
-    assert c.phrase_freq(["the", "the"], block_split=True).tolist() == [2]
+    assert c.phrase_freq(["the", "the"]).tolist() == [2]
     # two odd runs in one block: pairs 4 - ceil(triples 2 / 2) = 3
     toks = ["the"] * 3 + ["x"] + ["the"] * 3
     c = oracle.Corpus([0], [" ".join(toks)])
-    assert c.phrase_freq(["the", "the"]).tolist() == [2]
-    assert c.phrase_freq(["the", "the"], block_split=True).tolist() == [3]
+    assert c.phrase_freq(["the", "the"]).tolist() == [3]
 
 
 def _corpus():

@@ -100,6 +100,7 @@ class SparkWork:
         self.st = self.sc.statusTracker()
         self.enabled = enabled
         self._n = 0
+        self._group = None  # the last job group set
 
     @contextmanager
     def op(self, label: str, out: Optional[list] = None):
@@ -110,7 +111,7 @@ class SparkWork:
             yield
             return
         self._n += 1
-        group = f"perfbench-{self._n}-{label}"
+        group = self._group = f"perfbench-{self._n}-{label}"
         before = set(self.st.getJobIdsForGroup(None))
         self.sc.setJobGroup(group, label)
         try:
@@ -119,6 +120,14 @@ class SparkWork:
             self.sc.setLocalProperty("spark.jobGroup.id", None)
             extra = set(self.st.getJobIdsForGroup(None)) - before
             out.append(self.count(group, extra))
+
+    def jobs_submitted(self) -> int:
+        """Jobs the context has submitted so far: job ids are sequential,
+        and the newest job is ungrouped or in the last group set."""
+        ids = list(self.st.getJobIdsForGroup(None))
+        if self._group is not None:
+            ids += self.st.getJobIdsForGroup(self._group)
+        return max(ids, default=-1) + 1
 
     def count(self, group: str, extra=()) -> dict:
         st = self.st

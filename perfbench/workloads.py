@@ -22,8 +22,10 @@ import numpy as np
 K = 10
 SLOP = 2
 DOCS_PER_BLOCK = 4096  # as bench.py; the default 65,536 builds 20k docs as one task
-# serve_local's write phase: share of --seconds, and docs per commit
-MAINTAIN_SHARE = 0.4
+# serve_local's write phase: share of --seconds, and docs per commit. It
+# always makes one update and one delete commit (about 4 s together), so
+# a larger share only adds commits and lengthens the run.
+MAINTAIN_SHARE = 0.25
 UPDATE_BATCH = 64
 DELETE_BATCH = 16
 
