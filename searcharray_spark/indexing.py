@@ -9,23 +9,26 @@ re-architected for a multi-executor cluster, not ported):
 2. doc blocks: ``block_id = doc_id // docs_per_block`` — the unit of build
    parallelism AND the query-time partitioning of the doc axis. Local doc
    ids fit the 28-bit key field of the packed posting words.
-3. per-block build (``applyInPandas`` over blocks): tokenize (Arrow batch,
-   vectorized), flatten to (term, local_doc, posn), one-pass multi-term
-   encode into packed uint64 posting arrays + per-term block stats
-   (df, tf_total, block-max tf for WAND-style pruning).
-4. shuffle-merge: per-(term, block) rows — pre-aggregated per block
-   (combiner shape) and CHUNKED to a bounded byte size
-   (``max_words_per_row``) — are range-partitioned by block_id:
-   DOCUMENT-partitioned storage. Every file holds a block range with
-   the full term mix (uniform bytes, no hot-term write skew), sorted by
-   (term, block_id) within the file so parquet row-group min/max stats
-   prune query-term scans. A hot term's rows therefore spread across
-   every file — single-term scans parallelize across the cluster
-   instead of hitting one term-range partition.
-5. checkpointed build: blocks are processed in groups; each completed
-   group commits its output + a marker, so a killed build resumes from
-   the last committed group (north_rule resumability). Per-group metrics
-   (docs/sec, postings, bytes) land in ``metrics.jsonl``.
+3. per-block build (``mapInPandas`` over partitions of whole blocks):
+   tokenize (Arrow batch, vectorized), flatten to (term, local_doc,
+   posn), one-pass multi-term encode into packed uint64 posting arrays
+   + per-term block stats (df, tf_total, block-max tf for WAND-style
+   pruning).
+4. one pass into the final layout: per-(term, block) rows — pre-
+   aggregated per block (combiner shape) and CHUNKED to a bounded byte
+   size (``max_words_per_row``) — land in the output file that owns
+   their block range: DOCUMENT-partitioned storage. Every file holds a
+   block range with the full term mix (uniform bytes, no hot-term write
+   skew), sorted by (term, block_id) within the file so parquet
+   row-group min/max stats prune query-term scans. A hot term's rows
+   therefore spread across every file — single-term scans parallelize
+   across the cluster instead of hitting one term-range partition.
+5. checkpointed build: the one pass runs per checkpoint group, each
+   group a contiguous range of output files; each completed group
+   commits its files + a marker, so a killed build resumes from the
+   last committed group (north_rule resumability), and the finished
+   tables are the same for any group count. Per-group and finalize
+   metrics (secs, phases, docs/sec, bytes) land in ``metrics.jsonl``.
 
 Index layout on disk (parquet):
   postings/   term, block_id, postings(binary u64-LE), df, tf_total, tf_max
@@ -55,6 +58,7 @@ from __future__ import annotations
 import json
 
 import os
+import re
 import time
 from typing import Iterator, Optional
 
@@ -62,7 +66,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    BinaryType, FloatType, LongType, StringType, StructField, StructType,
+    BinaryType, LongType, StringType, StructField, StructType,
 )
 
 from . import kernels as K
@@ -144,7 +148,7 @@ def bounds_granularity(n_blocks_total: int) -> int:
 
 def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
                      granularity: int) -> None:
-    """Aggregate per-(term, block) stage rows into per-term sketch rows.
+    """Aggregate per-(term, block) posting rows into per-term sketch rows.
 
     Two-phase: partial agg by (term, group) — map-side combinable, so a
     hot term's shuffled volume is capped at MAX_BOUND_GROUPS rows — then
@@ -208,18 +212,12 @@ def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
         .write.mode("overwrite").parquet(path)
 
 
-STAGE_SCHEMA = StructType([
-    StructField("block_id", LongType()),
-    StructField("kind", StringType()),       # 'p' postings / 'd' doclens
-    StructField("term", StringType()),
-    StructField("postings", BinaryType()),   # packed u64 words (kind='p')
-    StructField("df", LongType()),
-    StructField("tf_total", LongType()),
-    StructField("tf_max", LongType()),
-    StructField("dl_min", LongType()),       # min doc_len among matching docs
-    StructField("doc_ids", BinaryType()),    # kind='d': i64-LE local doc ids
-    StructField("doc_lens", BinaryType()),   # kind='d': f32-LE doc lens
-])
+# per-block builder output: one row per (term, block) posting chunk
+# (kind 'p': term, postings = packed u64 words, df, tf_total, tf_max,
+# dl_min = min doc_len among matching docs) plus one packed doclens row
+# per block (kind 'd': doc_ids = i64-LE local ids, doc_lens = f32-LE)
+BUILDER_COLS = ["block_id", "kind", "term", "postings", "df", "tf_total",
+                "tf_max", "dl_min", "doc_ids", "doc_lens"]
 
 # final postings-table schema (order matches write_postings_table's select
 # and the driver-local writer, so fused-built files are bit-compatible)
@@ -235,47 +233,56 @@ POSTINGS_SCHEMA = StructType([
     StructField("dl_min", LongType()),
 ])
 
+
+def _file_postings(posts: pd.DataFrame) -> pd.DataFrame:
+    """Builder postings rows as one postings file holds them: sorted by
+    (term, block_id) — page min/max stats then prune pushed term
+    filters inside the single row group — in the table's columns."""
+    return posts.sort_values(["term", "block_id"], kind="stable")[
+        POSTINGS_COLS].astype({"block_id": "int64", "df": "int64",
+                               "tf_total": "int64", "tf_max": "int64",
+                               "dl_min": "int64"}, errors="ignore")
+
+
 # bound on the postings bytes a fused-build task yields per Arrow batch
 # (a plain binary Arrow column caps one batch at 2 GiB of payload)
 FUSED_SLICE_BYTES = 256 << 20
 
 
-def _ensure_parquet_dir(path: str, pa_schema) -> None:
-    """Guarantee ``path`` is a readable parquet dir: a write whose every
-    partition was empty produces no files, and ``spark.read.parquet``
-    then fails schema inference. Writes one empty single-row-group file."""
+def _ensure_doclens_dir(path: str) -> None:
+    """Guarantee ``path`` is a readable doclens dir: an empty corpus
+    side-writes no doclens file, and readers then fail schema
+    inference. Writes one empty single-row-group file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     os.makedirs(path, exist_ok=True)
     if any(True for _ in os.listdir(path) if _.endswith(".parquet")):
         return
-    pq.write_table(pa.Table.from_pylist([], schema=pa_schema),
-                   os.path.join(path, "part-empty.parquet"),
-                   compression="zstd")
+    pq.write_table(pa.Table.from_pylist([], schema=pa.schema([
+        ("block_id", pa.int64()), ("doc_ids", pa.binary()),
+        ("doc_lens", pa.binary())])),
+        os.path.join(path, "part-empty.parquet"), compression="zstd")
 
 
-def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
+def _make_partition_kernel(builder, doclens_dir: str):
     """Partition-level build kernel for ``mapInPandas``.
 
     The input exchange places WHOLE doc blocks into each partition
     (exact-placement ``repartition_exact`` on a block-derived fid), so
     the per-block builder can run here without the extra
     ``groupBy().applyInPandas`` hash exchange Spark would otherwise
-    insert (guide §2.4: the old path shuffled the full text twice —
+    insert (guide §2.4: that exchange shuffled the full text twice —
     once for balance, once for ENSURE_REQUIREMENTS — and the second
     exchange re-introduced the balls-in-bins skew the first one fixed).
 
-    Two modes:
-      * ``doclens_dir=None`` — staged/resumable path: yield STAGE_SCHEMA
-        rows exactly as the old per-block ``applyInPandas`` did.
-      * ``doclens_dir=...`` — fused path: this task IS final postings
-        file ``partitionId``; it side-writes the partition's doclens
-        file (deterministic content + atomic rename, so task retries
-        are idempotent; per-partition corpus stats ride in the parquet
-        footer metadata) and yields the postings rows term-sorted, so
-        the enclosing job's parquet write lands them in the final
-        block-range layout with NO further shuffle (guide §8: heavy
-        bytes move exactly once).
+    The task IS postings file ``partitionId`` of its pass: it
+    side-writes the partition's doclens file (deterministic content,
+    written to a temp name and moved through ``fsutil`` on whatever
+    store ``doclens_dir`` resolves to, so task retries are idempotent;
+    per-partition corpus stats ride in the parquet footer metadata) and
+    yields the postings rows term-sorted, so the enclosing job's
+    parquet write lands them in the final block-range layout with NO
+    further shuffle (guide §8: heavy bytes move exactly once).
     """
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -298,14 +305,11 @@ def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
             pieces = buckets.pop(b)
             grp = (pd.concat(pieces, ignore_index=True)
                    if len(pieces) > 1 else pieces[0])
-            # doc_id order within the block, as the staged/local builds
-            # always presented it (deterministic builder output)
+            # doc_id order within the block, as the local build always
+            # presents it (deterministic builder output)
             grp = grp.sort_values("doc_id", kind="stable")
             parts.append(builder(grp))
         stage = pd.concat(parts, ignore_index=True)
-        if doclens_dir is None:
-            yield stage
-            return
 
         import uuid
 
@@ -313,14 +317,15 @@ def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
+        from . import fsutil
+
         posts = stage[stage["kind"] == "p"]
         dls = stage[stage["kind"] == "d"]  # already in block_id order
 
         # --- side-write this partition's doclens file (tiny: ~12B/doc) ---
         fid = TaskContext.get().partitionId()
         n_docs = int(sum(len(b) // 8 for b in dls["doc_ids"]))
-        # mirror the staged path's accumulation: f32 sum per block,
-        # accumulated in float64
+        # f32 sum per block, accumulated in float64
         total_tokens = float(sum(
             float(np.frombuffer(b, dtype="<f4").sum())
             for b in dls["doc_lens"]))
@@ -333,20 +338,17 @@ def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
             dls[["block_id", "doc_ids", "doc_lens"]]
             .astype({"block_id": "int64"}),
             schema=dl_schema, preserve_index=False)
-        final = os.path.join(doclens_dir, f"part-{fid:05d}.parquet")
-        tmp = os.path.join(doclens_dir,
-                           f".part-{fid:05d}-{uuid.uuid4().hex}.tmp")
+        fs, root = fsutil.resolve(doclens_dir)
+        final = fsutil.join(root, f"part-{fid:05d}.parquet")
+        tmp = fsutil.join(root, f".part-{fid:05d}-{uuid.uuid4().hex}.tmp")
         pq.write_table(dl_table, tmp, row_group_size=max(1, len(dls)),
-                       compression="zstd")
-        os.replace(tmp, final)
+                       compression="zstd", filesystem=fs)
+        fs.move(tmp, final)
 
         # --- emit final postings rows: term-sorted (page min/max stats
         # prune pushed term filters inside the single row group), sliced
         # to bound Arrow batch payload ---
-        posts = posts.sort_values(["term", "block_id"], kind="stable")
-        out = posts[POSTINGS_COLS].astype(
-            {"block_id": "int64", "df": "int64", "tf_total": "int64",
-             "tf_max": "int64", "dl_min": "int64"}, errors="ignore")
+        out = _file_postings(posts)
         if not len(out):
             return
         bytes_cum = out["postings"].map(len).to_numpy(dtype=np.int64).cumsum()
@@ -426,12 +428,11 @@ SMALL_BUILD_MAX_BYTES = 64 << 20
 TS_LOCAL_MAX_POSTINGS_BYTES = 256 << 20
 
 
-def _write_term_stats_pdf(posts: pd.DataFrame, ts_dir: str,
-                          granularity: int) -> None:
-    """Aggregate per-(term, block) posting metadata rows into the
-    per-term sketch table and write ONE single-row-group file. Shared by
-    the driver-local build and the fused build's driver-side finalize
-    (gated on postings bytes).
+def _write_term_stats_pdf(posts, ts_dir: str, granularity: int) -> None:
+    """Aggregate per-(term, block) posting metadata rows (a pyarrow
+    table) into the per-term sketch table and write ONE single-row-group
+    file. Shared by the driver-local build and the fused build's
+    driver-side finalize (gated on postings bytes).
 
     Vectorized: one lexsort + reduceat passes over numpy arrays, with
     Python touched only to slice each term's packed byte arrays. The
@@ -446,32 +447,23 @@ def _write_term_stats_pdf(posts: pd.DataFrame, ts_dir: str,
         ("n_blocks", pa.int64()), ("grp_ids", pa.binary()),
         ("grp_tf_max", pa.binary()), ("grp_dl_min", pa.binary())])
     if len(posts):
-        if isinstance(posts, pd.DataFrame):
-            codes, uniques = pd.factorize(posts["term"].to_numpy(),
-                                          sort=True)
-            codes = codes.astype(np.int64)
+        # dictionary-encode the term column in C++ instead of
+        # materializing millions of Python strings (measured 2.8 -> ~1 s
+        # at a 500k-doc / 300k-term corpus)
+        term_col = posts.column("term")
+        if not pa.types.is_dictionary(term_col.type):
+            term_col = term_col.dictionary_encode()
+        enc = term_col.combine_chunks()
+        raw_codes = enc.indices.to_numpy().astype(np.int64)
+        dic = np.asarray(enc.dictionary.to_pylist(), dtype=object)
+        dic_order = np.argsort(dic)  # codepoint order
+        rank = np.empty(len(dic), dtype=np.int64)
+        rank[dic_order] = np.arange(len(dic), dtype=np.int64)
+        codes = rank[raw_codes]
+        uniques = dic[dic_order]
 
-            def col(name):
-                return posts[name].to_numpy(dtype=np.int64)
-        else:
-            # pyarrow table: dictionary-encode the term column in C++
-            # instead of materializing millions of Python strings
-            # (measured 2.8 -> ~1 s at a 500k-doc / 300k-term corpus)
-            term_col = posts.column("term")
-            import pyarrow as _pa
-            if not _pa.types.is_dictionary(term_col.type):
-                term_col = term_col.dictionary_encode()
-            enc = term_col.combine_chunks()
-            raw_codes = enc.indices.to_numpy().astype(np.int64)
-            dic = np.asarray(enc.dictionary.to_pylist(), dtype=object)
-            dic_order = np.argsort(dic)  # same unicode order as factorize
-            rank = np.empty(len(dic), dtype=np.int64)
-            rank[dic_order] = np.arange(len(dic), dtype=np.int64)
-            codes = rank[raw_codes]
-            uniques = dic[dic_order]
-
-            def col(name):
-                return posts.column(name).to_numpy().astype(np.int64)
+        def col(name):
+            return posts.column(name).to_numpy().astype(np.int64)
         blocks = col("block_id")
         grp = blocks // granularity
         df_ = col("df")
@@ -531,6 +523,47 @@ def _write_pq_single_rg(path: str, pdf: pd.DataFrame, schema) -> None:
                    compression="snappy")
 
 
+def _uncommit(index_path: str, tables) -> None:
+    """Drop meta.json — the index's commit marker (loaders require it)
+    — BEFORE touching any table, so a build killed mid-write leaves an
+    unreadable index, never a stale meta over partial tables; then
+    clear ``tables``."""
+    import shutil
+    try:
+        os.remove(os.path.join(index_path, "meta.json"))
+    except OSError:
+        pass
+    for sub in tables:
+        shutil.rmtree(os.path.join(index_path, sub), ignore_errors=True)
+
+
+def _commit_build(spark, index_path: str, tokenizer_fn, t_start: float,
+                  meta: dict, record: dict):
+    """Commit a finished build and open it: write meta.json — the
+    index's commit marker, so always the build's last table write —
+    then append the build's finalize record to metrics.jsonl. ``meta``
+    and ``record`` carry the fields that differ between builds."""
+    from .index import SearchIndex
+    n, tokens = meta["num_docs"], meta["total_tokens"]
+    secs = round(time.time() - t_start, 3)
+    meta = {
+        # 3 = block-range-partitioned postings (zero-shuffle phrase path)
+        # 4 = + verified single-row-group postings files (sound alignment
+        #     predicate), per-term bound sketches, side-input doclens
+        "format_version": 4, **meta,
+        "avg_doc_len": (tokens / n) if n else 0.0, "build_secs": secs,
+    }
+    with open(os.path.join(index_path, "meta.json"), "w") as fh:
+        json.dump(meta, fh, indent=2)
+    with open(os.path.join(index_path, "metrics.jsonl"), "a") as fh:
+        fh.write(json.dumps({
+            "stage": "finalize", "num_docs": n, "total_tokens": tokens,
+            "secs": secs, "docs_per_sec": round(n / max(secs, 1e-9), 1),
+            "tokens_per_sec": round(tokens / max(secs, 1e-9), 1), **record,
+        }) + "\n")
+    return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
+
+
 def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
                        docs_per_block: int, n_blocks: int,
                        term_partitions: int, tokenizer_name: str,
@@ -544,12 +577,10 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
     """
     import pyarrow as pa
 
-    from .index import SearchIndex
-
     pdf = pdf.sort_values(["block_id", "doc_id"], kind="stable")
     stage_parts = [builder(grp) for _, grp in pdf.groupby("block_id", sort=True)]
     stage = pd.concat(stage_parts, ignore_index=True) if stage_parts else \
-        pd.DataFrame(columns=[f.name for f in STAGE_SCHEMA.fields])
+        pd.DataFrame(columns=BUILDER_COLS)
 
     posts = stage[stage["kind"] == "p"]
     dls = stage[stage["kind"] == "d"]
@@ -572,18 +603,11 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
         ("dl_min", pa.int64())])
     p_dir = os.path.join(index_path, "postings")
     os.makedirs(p_dir, exist_ok=True)
-    p_cols = ["term", "block_id", "postings", "df", "tf_total", "tf_max",
-              "dl_min"]
     p_file = file_of(posts["block_id"].to_numpy(dtype=np.int64)) \
         if len(posts) else np.zeros(0, dtype=np.int64)
     for i in range(n_files):
-        part = posts[p_file == i].sort_values(["term", "block_id"],
-                                              kind="stable")[p_cols]
-        part = part.astype({"block_id": "int64", "df": "int64",
-                            "tf_total": "int64", "tf_max": "int64",
-                            "dl_min": "int64"}, errors="ignore")
-        _write_pq_single_rg(
-            os.path.join(p_dir, f"part-{i:05d}.parquet"), part, posts_schema)
+        _write_pq_single_rg(os.path.join(p_dir, f"part-{i:05d}.parquet"),
+                            _file_postings(posts[p_file == i]), posts_schema)
 
     dl_schema = pa.schema([
         ("block_id", pa.int64()), ("doc_ids", pa.binary()),
@@ -602,35 +626,21 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
     granularity = bounds_granularity(n_blocks)
     ts_dir = os.path.join(index_path, "term_stats")
     os.makedirs(ts_dir, exist_ok=True)
-    _write_term_stats_pdf(posts, ts_dir, granularity)
+    _write_term_stats_pdf(pa.Table.from_pandas(posts[[
+        "term", "block_id", "df", "tf_total", "tf_max", "dl_min"]],
+        preserve_index=False), ts_dir, granularity)
 
     num_docs = int(sum(len(b) // 8 for b in dls["doc_ids"]))
     total_tokens = float(sum(
         np.frombuffer(b, dtype="<f4").sum() for b in dls["doc_lens"]))
-    meta = {
-        "format_version": 4,
-        "tokenizer": tokenizer_name,
-        "docs_per_block": docs_per_block,
-        "truncate": truncate,
-        "num_docs": num_docs,
-        "avg_doc_len": (total_tokens / num_docs) if num_docs else 0.0,
-        "total_tokens": total_tokens,
-        "bounds_granularity": granularity,
-        "postings_single_row_group": True,  # by construction (verified)
-        "build_secs": round(time.time() - t_start, 3),
-        "built_local": True,
-    }
     assert verify_single_row_group(p_dir)
-    with open(os.path.join(index_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-    with open(os.path.join(index_path, "metrics.jsonl"), "a") as fh:
-        fh.write(json.dumps({
-            "stage": "finalize", "num_docs": num_docs,
-            "total_tokens": total_tokens, "secs": meta["build_secs"],
-            "docs_per_sec": round(num_docs / max(meta["build_secs"], 1e-9), 1),
-            "local_build": True,
-        }) + "\n")
-    return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
+    return _commit_build(spark, index_path, tokenizer_fn, t_start, {
+        "tokenizer": tokenizer_name, "docs_per_block": docs_per_block,
+        "truncate": truncate, "num_docs": num_docs,
+        "total_tokens": total_tokens, "bounds_granularity": granularity,
+        "postings_single_row_group": True,  # by construction (verified)
+        "built_local": True,
+    }, {"local_build": True})
 
 
 def _make_block_builder(tokenizer_fn, docs_per_block: int, truncate: bool,
@@ -728,11 +738,7 @@ def _make_block_builder(tokenizer_fn, docs_per_block: int, truncate: bool,
             sorted_ids.astype("<i8").tobytes(),
             sorted_lens.astype("<f4").tobytes(),
         ))
-        return pd.DataFrame(
-            terms_out,
-            columns=["block_id", "kind", "term", "postings", "df", "tf_total",
-                     "tf_max", "dl_min", "doc_ids", "doc_lens"],
-        )
+        return pd.DataFrame(terms_out, columns=BUILDER_COLS)
 
     return build_block
 
@@ -834,37 +840,71 @@ def _plan_size_estimate(df: DataFrame) -> int:
         return 0
 
 
+def _check_doclens_cover(postings_dir: str, doclens_dir: str,
+                         num_docs: int) -> None:
+    """Raise unless the doclens table covers every postings file.
+
+    Executors side-write the doclens files; on a store they do not share
+    with the driver those files never reach the index, and the build
+    would commit ``num_docs=0``. Footer reads only: both tables are cut
+    into the same contiguous block ranges, so each non-empty postings
+    file's block range must lie inside one doclens file's range, and the
+    footer ``n_docs`` sum must be positive whenever postings exist.
+    """
+    import bisect
+
+    from .index import scan_doclens_ranges
+    dls = sorted((lo, hi) for _s, _f, lo, hi
+                 in scan_doclens_ranges([(0, doclens_dir)]))
+    for _s, f, lo, hi in scan_doclens_ranges([(0, postings_dir)]):
+        i = bisect.bisect_right(dls, (lo, float("inf"))) - 1
+        if num_docs <= 0 or i < 0 or hi > dls[i][1]:
+            raise RuntimeError(
+                f"postings file {f} holds blocks {lo}..{hi}, but the "
+                f"doclens files under {doclens_dir} (footer n_docs sum "
+                f"{num_docs}) do not cover them: the executors' doclens "
+                "writes did not reach the index location")
+
+
 def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
                        docs_per_block: int, term_partitions: Optional[int],
                        tokenizer_name: str, truncate: bool, t_start: float,
                        tokenizer_fn, phases: dict,
-                       known_max_doc: Optional[int] = None):
-    """Single-pass distributed build (checkpoint_groups <= 1).
+                       known_max_doc: Optional[int] = None,
+                       groups: int = 1, resume: bool = False):
+    """Single-pass distributed build, committed in ``groups`` checkpoint
+    groups (one unless the caller asked for ``checkpoint_groups``).
 
     First-principles shape (guide §1.1/§8): the text must cross the
     network once (to group whole doc blocks per output file) and the
     index bytes must be written once. This path does exactly that:
 
       1. ONE cheap column-pruned agg learns max(doc_id) => n_blocks.
-      2. ONE exchange places contiguous block ranges into
-         ``term_partitions`` partitions (exact placement — no sampling
-         pass, no skew), where the partition kernel tokenizes + encodes
-         its blocks, side-writes the partition's doclens file (tiny;
-         corpus stats ride in its parquet footer), and emits the
-         partition's postings rows term-sorted — which the SAME job's
-         parquet write lands as the final single-row-group
-         block-range files. No stage table, no second shuffle of index
-         bytes, no re-read of the corpus.
+      2. Per group, ONE exchange places contiguous block ranges into
+         the group's share of the ``term_partitions`` output files
+         (exact placement — no sampling pass, no skew), where the
+         partition kernel tokenizes + encodes its blocks, side-writes
+         the partition's doclens file (tiny; corpus stats ride in its
+         parquet footer), and emits the partition's postings rows
+         term-sorted — which the SAME job's parquet write lands as
+         single-row-group block-range files. No stage table, no second
+         shuffle of index bytes, no re-read of the corpus.
       3. term_stats derive from the postings table's METADATA columns
          (columnar scan skips the packed binary; same trick merge.py
          uses) — a vocabulary-sized job.
 
-    The old staged path wrote the full index bytes to a stage table and
-    re-shuffled them into layout (plus a second accidental exchange of
-    the text, see _make_partition_kernel); it remains only for
-    checkpointed/resumable builds (checkpoint_groups > 1).
+    Checkpoint group g of G owns output file ids ``[g*T//G,
+    (g+1)*T//G)`` — a contiguous block range. It writes under
+    ``_groups/group_{g}_of_{G}/``, a location it alone owns and
+    overwrites (re-running a group is idempotent), then commits the
+    ``group_{g}_of_{G}.done`` marker (tmp + replace) and appends a
+    ``build_group`` record to metrics.jsonl. ``resume=True`` skips
+    committed groups. Once every group is committed, their files move
+    into the flat ``postings/`` and ``doclens/`` tables under global
+    file ids; a move interrupted by a crash finishes on resume (moved
+    files are no longer in the group dir).
     """
-    from .index import SearchIndex
+    from . import fsutil
 
     # --- n_blocks from max(doc_id): column-pruned, and on parquet
     # sources spark.sql.parquet.aggregatePushdown can answer it from
@@ -879,44 +919,63 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     n_blocks = int(max_doc // docs_per_block) + 1 if max_doc is not None else 1
 
     if term_partitions is None:
-        # target ~64 MB postings files (same goal as the staged path,
-        # which sized from actual staged bytes). Here the layout must be
-        # fixed BEFORE the one pass, so size from the input estimate:
-        # compressed corpus bytes ~ compressed postings bytes (measured
-        # 0.8-1.3x on the bench corpora). Still data-sized, never
-        # core-count-sized.
+        # target ~64 MB postings files. The layout must be fixed BEFORE
+        # the one pass, so size from the input estimate: compressed
+        # corpus bytes ~ compressed postings bytes (measured 0.8-1.3x on
+        # the bench corpora). Still data-sized, never core-count-sized.
         est = _plan_size_estimate(df)
         term_partitions = max(4, spark.sparkContext.defaultParallelism,
                               -(-est // (64 << 20)) if est > 0 else 0)
-        # beyond the exact-placement cap (>= ~4 TB of index in one
-        # un-checkpointed build) clamp: files grow past the 64 MB target
-        # rather than widening the layout past the probe table; such
-        # builds should use checkpoint_groups > 1 anyway
+        # beyond the exact-placement cap (>= ~4 TB of index) clamp:
+        # files grow past the 64 MB target rather than widening the
+        # layout past the probe table. An explicit wider layout runs
+        # repartition_exact's sampled range fallback instead.
         term_partitions = min(term_partitions, PROBE_MAX_PARTITIONS)
-    assert term_partitions <= PROBE_MAX_PARTITIONS  # caller-routed (build_index)
+    # every checkpoint group owns at least one output file
+    term_partitions = max(int(term_partitions), groups)
 
     granularity = bounds_granularity(n_blocks)
     postings_dir = os.path.join(index_path, "postings")
     doclens_dir = os.path.join(index_path, "doclens")
     ts_dir = os.path.join(index_path, "term_stats")
+    marker_dir = os.path.join(index_path, "_groups")
+    metrics_path = os.path.join(index_path, "metrics.jsonl")
     import shutil as _sh
-    # meta.json is the index's commit marker (loaders require it):
-    # dropping it FIRST means a build killed mid-pass leaves an
-    # unreadable index, never a stale meta over fresh partial tables
-    try:
-        os.remove(os.path.join(index_path, "meta.json"))
-    except OSError:
-        pass
-    _sh.rmtree(doclens_dir, ignore_errors=True)
-    os.makedirs(doclens_dir, exist_ok=True)
+    layout = [term_partitions, n_blocks]
 
-    # --- THE pass: text exchanged once into final-file partitions ---
+    def group_files(g: int):
+        """(owned dir, first file id, end file id) of group g"""
+        return (os.path.join(marker_dir, f"group_{g}_of_{groups}"),
+                g * term_partitions // groups,
+                (g + 1) * term_partitions // groups)
+
+    def committed(g: int) -> bool:
+        marker = group_files(g)[0] + ".done"
+        if not (resume and os.path.exists(marker)):
+            return False
+        with open(marker) as fh:
+            if json.load(fh).get("layout") != layout:
+                raise ValueError(
+                    f"cannot resume {index_path}: group {g} was committed "
+                    "for a different layout than [term_partitions, "
+                    f"n_blocks] = {layout}; rebuild without resume")
+        return True
+
+    done = [committed(g) for g in range(groups)]
+    # no group's files move into postings/ + doclens/ before every group
+    # has committed: until then anything there is stale; after, a
+    # resumed build finishes the moves a crash interrupted
+    stale = () if all(done) else ("postings", "doclens")
+    _uncommit(index_path, stale if resume else stale + ("_groups",))
+    for sub in (postings_dir, doclens_dir, marker_dir):
+        os.makedirs(sub, exist_ok=True)
+
+    # --- THE pass, once per group: text exchanged once into
+    # final-file partitions ---
     t_p = time.time()
     fid = F.floor(F.col("block_id") * F.lit(int(term_partitions))
                   / F.lit(int(max(n_blocks, 1))))
-    dfp = repartition_exact(df, fid, term_partitions,
-                            range_fallback_cols=["block_id"])
-    kernel = _make_partition_kernel(builder, doclens_dir=doclens_dir)
+
     # AQE has nothing to optimize here (fixed REPARTITION_BY_NUM width,
     # no joins, partition coalescing already disabled) but its stage
     # materialization adds a scheduling round — measured ~0.1-0.2 s per
@@ -924,31 +983,60 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        dfp.mapInPandas(kernel, POSTINGS_SCHEMA) \
-            .write.mode("overwrite") \
-            .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
-            .parquet(postings_dir)
+        for g in range(groups):
+            if done[g]:
+                continue
+            g_dir, lo, hi = group_files(g)
+            marker = g_dir + ".done"
+            g_start = time.time()
+            _sh.rmtree(g_dir, ignore_errors=True)
+            os.makedirs(os.path.join(g_dir, "doclens"))
+            # the group's blocks (lo <= b*T//n_blocks < hi) as a doc_id
+            # range the scan can prune by; open at the corpus ends, so a
+            # single group reads the corpus unfiltered, as one pass did
+            first, end = (-(-f * n_blocks // term_partitions) * docs_per_block
+                          for f in (lo, hi))
+            part = df.filter(F.col("doc_id") >= first) if lo else df
+            if hi < term_partitions:
+                part = part.filter(F.col("doc_id") < end)
+            dfp = repartition_exact(part, fid - lo, hi - lo,
+                                    range_fallback_cols=["block_id"])
+            kernel = _make_partition_kernel(
+                builder, os.path.join(g_dir, "doclens"))
+            dfp.mapInPandas(kernel, POSTINGS_SCHEMA) \
+                .write.mode("overwrite") \
+                .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
+                .parquet(os.path.join(g_dir, "postings"))
+            g_secs = time.time() - g_start
+            # atomic commit: a crash mid-write must not leave a partial
+            # marker
+            with open(marker + ".tmp", "w") as fh:
+                json.dump({"group": g, "secs": g_secs, "layout": layout}, fh)
+            os.replace(marker + ".tmp", marker)
+            with open(metrics_path, "a") as fh:
+                fh.write(json.dumps({
+                    "stage": "build_group", "group": g,
+                    "secs": round(g_secs, 3),
+                }) + "\n")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    # drop stray tmp files from failed/retried task attempts
-    for f in os.listdir(doclens_dir):
-        if f.endswith(".tmp"):
-            try:
-                os.remove(os.path.join(doclens_dir, f))
-            except OSError:
-                pass
-    phases["build_pass"] = round(time.time() - t_p, 3)
 
-    # empty-corpus guard: a write with zero rows leaves no readable files
-    import pyarrow as pa
-    _ensure_parquet_dir(postings_dir, pa.schema([
-        ("term", pa.string()), ("block_id", pa.int64()),
-        ("postings", pa.binary()), ("df", pa.int64()),
-        ("tf_total", pa.int64()), ("tf_max", pa.int64()),
-        ("dl_min", pa.int64())]))
-    _ensure_parquet_dir(doclens_dir, pa.schema([
-        ("block_id", pa.int64()), ("doc_ids", pa.binary()),
-        ("doc_lens", pa.binary())]))
+    # every group committed: land their files in the flat tables. Both
+    # tables name a task's file part-<partition id in its pass>...; the
+    # group's first file id makes that global. Only .parquet files move
+    # — retried tasks' temp files and Spark's _SUCCESS/.crc files go
+    # with the group dir.
+    for g in range(groups):
+        g_dir, lo, _hi = group_files(g)
+        for sub, dst in (("postings", postings_dir), ("doclens", doclens_dir)):
+            src = fsutil.join(g_dir, sub)
+            for name in fsutil.listdir(src):
+                pid = re.match(r"part-(\d+)", name)
+                if pid and name.endswith(".parquet"):
+                    fsutil.move(fsutil.join(src, name), fsutil.join(dst, (
+                        f"part-{lo + int(pid[1]):05d}{name[pid.end():]}")))
+        fsutil.rmtree(g_dir)
+    phases["build_pass"] = round(time.time() - t_p, 3)
 
     # --- term sketches from the postings table's metadata columns (the
     # packed binary column never leaves the parquet scan). Small
@@ -959,7 +1047,6 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     # table. Large indexes run the distributed two-phase agg at a
     # DATA-sized width. ---
     t_p = time.time()
-    from . import fsutil
 
     def _pq_bytes(root: str) -> int:
         return sum(sz for _p, sz in fsutil.list_parquet_files(root))
@@ -985,10 +1072,6 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
         ts_width = max(1, min(int(term_partitions),
                               int(-(-postings_bytes // (64 << 20)))))
         write_term_stats(posts_meta, ts_dir, ts_width, granularity)
-    _ensure_parquet_dir(ts_dir, pa.schema([
-        ("term", pa.string()), ("df", pa.int64()), ("tf_total", pa.int64()),
-        ("n_blocks", pa.int64()), ("grp_ids", pa.binary()),
-        ("grp_tf_max", pa.binary()), ("grp_dl_min", pa.binary())]))
     phases["term_stats"] = round(time.time() - t_p, 3)
 
     # --- corpus stats + alignment verification: one driver footer walk
@@ -1000,39 +1083,25 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
         md = fsutil.parquet_file(fp).metadata.metadata or {}
         num_docs += int(md.get(b"n_docs", b"0"))
         total_tokens += float(md.get(b"total_tokens", b"0"))
+    _check_doclens_cover(postings_dir, doclens_dir, num_docs)
+    # only an empty corpus gets here without doclens files (Spark writes
+    # a schema-only file for an empty postings write, and both
+    # term-stats writers always write one)
+    _ensure_doclens_dir(doclens_dir)
     srg = verify_single_row_group(postings_dir)
     phases["stats_verify"] = round(time.time() - t_p, 3)
 
-    meta = {
-        "format_version": 4,
-        "tokenizer": tokenizer_name,
-        "docs_per_block": docs_per_block,
-        "truncate": truncate,
-        "num_docs": num_docs,
-        "avg_doc_len": (total_tokens / num_docs) if num_docs else 0.0,
-        "total_tokens": total_tokens,
-        "bounds_granularity": granularity,
+    return _commit_build(spark, index_path, tokenizer_fn, t_start, {
+        "tokenizer": tokenizer_name, "docs_per_block": docs_per_block,
+        "truncate": truncate, "num_docs": num_docs,
+        "total_tokens": total_tokens, "bounds_granularity": granularity,
         "postings_single_row_group": bool(srg),
-        "build_secs": round(time.time() - t_start, 3),
-    }
-    with open(os.path.join(index_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-
-    with open(os.path.join(index_path, "metrics.jsonl"), "a") as fh:
-        fh.write(json.dumps({
-            "stage": "finalize", "num_docs": num_docs,
-            "total_tokens": total_tokens,
-            "secs": meta["build_secs"],
-            "phases": phases,
-            "docs_per_sec": round(num_docs / max(meta["build_secs"], 1e-9), 1),
-            "tokens_per_sec": round(
-                total_tokens / max(meta["build_secs"], 1e-9), 1),
-            "fused_build": True,
-            "postings_bytes": postings_bytes,
-            "doclens_bytes": _pq_bytes(doclens_dir),
-            "term_stats_bytes": _pq_bytes(ts_dir),
-        }) + "\n")
-    return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
+    }, {
+        "phases": phases, "fused_build": True,
+        "postings_bytes": postings_bytes,
+        "doclens_bytes": _pq_bytes(doclens_dir),
+        "term_stats_bytes": _pq_bytes(ts_dir),
+    })
 
 
 def build_index(
@@ -1050,26 +1119,21 @@ def build_index(
     checkpoint_groups: int = 1,
     resume: bool = False,
     max_words_per_row: int = 131072,
-    stage_partitions: Optional[int] = None,
 ):
     """Build the inverted index; returns a loaded ``SearchIndex``.
 
-    ``checkpoint_groups`` > 1 splits the corpus into doc-block groups that
-    commit independently (resumable via ``resume=True``).
+    Small corpora build driver-locally; the rest run the fused
+    distributed pass. ``checkpoint_groups`` > 1 splits that pass into
+    contiguous doc-block ranges that commit independently, and
+    ``resume=True`` skips the groups a killed build already committed
+    (either option selects the distributed pass at any corpus size;
+    ``term_partitions`` is raised to ``checkpoint_groups`` so each group
+    owns a file). The finished index reads the same for any group count.
 
     ``tokens_col`` builds from a pre-tokenized ``array<string>`` column
     (reference S3, indexing.py:298-342) — no tokenizer runs at build
     time; ``tokenizer`` still names the query-side tokenizer.
-
-    ``stage_partitions`` sets the width of the one build shuffle (text →
-    per-block builder). Defaults to ``spark.sql.shuffle.partitions`` so
-    the job's layout — and therefore its total work — is a function of
-    the DATA sizing the user configured, not of how many cores happen to
-    be attached; resizing the cluster then changes only wall-clock, which
-    is what a scaling-efficiency comparison must measure.
     """
-    from .index import SearchIndex
-
     tokenizer_fn = tokenizers.resolve(tokenizer)
     try:
         tokenizer_name = tokenizers.name_of(tokenizer)
@@ -1100,319 +1164,102 @@ def build_index(
 
     phases: dict = {}
 
-    if checkpoint_groups <= 1 and not resume and (
-            term_partitions is None
-            or term_partitions <= PROBE_MAX_PARTITIONS):
-        # --- small-build gate, cheapest evidence first ---
-        # 1. plan-size estimate (no I/O): compressed input > 64 MB
-        #    already proves raw text > SMALL_BUILD_MAX_BYTES — big
-        #    corpora never run a single gate job.
-        # 2. input parquet footers (driver, footer bytes only): exact
-        #    row count upper bound + raw text bytes upper bound + (when
-        #    the plan has no Filter) the exact max doc_id — the common
-        #    "build from a parquet table" case decides the gate AND the
-        #    fused path's n_blocks with ZERO Spark jobs.
-        # 3. fallback probe jobs: an incremental take() of doc_id only
-        #    (CollectLimit answers after ~one split; no text pages are
-        #    decompressed), plus a bounded byte-sum job when small, with
-        #    the fused path's max(doc_id) agg overlapped on a thread
-        #    (guide §2.6).
-        t_p = time.time()
-        est = _plan_size_estimate(df)
-        footer = (None if est > SMALL_BUILD_MAX_BYTES
-                  else _scan_footer_stats(df, in_col,
-                                          doc_src_col=doc_id_col or "doc_id"))
-        max_doc = None
-        rows_maybe_small = True  # until proven otherwise
-        is_small: Optional[bool] = None
-        if est > SMALL_BUILD_MAX_BYTES:
-            # compressed input beyond the cap => raw text beyond the cap
-            is_small = False
-        elif footer is not None:
-            rows_ub, text_enc_bytes, footer_max = footer
-            if known_max_doc is None:
-                known_max_doc = footer_max  # may be None (filtered scan)
-            if rows_ub > SMALL_BUILD_MAX_DOCS:
-                is_small = False
-            elif (text_enc_bytes is not None
-                    and text_enc_bytes > SMALL_BUILD_MAX_BYTES):
-                # encoded bytes already exceed the cap => raw does too.
-                # (The converse NEVER proves smallness: dictionary/RLE
-                # encoding can shrink the footer number by orders of
-                # magnitude below the decoded text.)
-                is_small = False
-            # else: row count small — raw byte cap still needs the
-            # bounded job below
-        max_fut = None
-        pool = None
-        if is_small is None:
-            from concurrent.futures import ThreadPoolExecutor
-            if known_max_doc is None:
-                pool = ThreadPoolExecutor(1)
-                max_fut = pool.submit(
-                    lambda: df.agg(F.max("doc_id")).collect()[0][0])
-            if footer is None:
-                probe = df.select("doc_id").take(SMALL_BUILD_MAX_DOCS + 1)
-                rows_maybe_small = len(probe) <= SMALL_BUILD_MAX_DOCS
-                max_doc = (max((r["doc_id"] for r in probe), default=None)
-                           if rows_maybe_small else None)
-            if rows_maybe_small:
-                if tokens_col is None:
-                    nb = F.octet_length("text")
-                else:
-                    # pretokenized: per-doc size ~ token bytes + slack
-                    nb = F.expr(
-                        "aggregate(text, 0L, (a, x) -> a + octet_length(x) + 8L)")
-                total_bytes = df.select(nb.alias("nb")) \
-                    .limit(SMALL_BUILD_MAX_DOCS + 1) \
-                    .agg(F.sum("nb")).collect()[0][0] or 0
-                is_small = total_bytes <= SMALL_BUILD_MAX_BYTES
-            else:
-                is_small = False
-        phases["probe"] = round(time.time() - t_p, 3)
-        if is_small:
-            # driver-local fast path: identical layout, zero Spark jobs
-            # past this toPandas — update segments, streaming
-            # micro-batches, and toy benches skip the fixed scheduling
-            # overhead of distributed build jobs
-            pdf = df.select("doc_id", "text", "block_id").toPandas()
-            if max_doc is None:
-                max_doc = (int(pdf["doc_id"].max()) if len(pdf)
-                           else None)
-            n_blocks = (int(max_doc // docs_per_block) + 1
-                        if max_doc is not None else 1)
-            os.makedirs(index_path, exist_ok=True)
-            # meta.json is the commit marker: drop it BEFORE touching
-            # any table dir, so a rebuild killed mid-write leaves an
-            # unreadable index instead of stale meta over partial
-            # tables (same invariant as the fused path)
-            try:
-                os.remove(os.path.join(index_path, "meta.json"))
-            except OSError:
-                pass
-            for sub in ("postings", "doclens", "term_stats"):
-                import shutil as _sh
-                _sh.rmtree(os.path.join(index_path, sub), ignore_errors=True)
-            tp = term_partitions or max(
-                1, min(4, spark.sparkContext.defaultParallelism))
-            if pool is not None:
-                pool.shutdown(wait=False)
-            return _build_index_local(
-                spark, pdf, index_path, builder, docs_per_block, n_blocks, tp,
-                tokenizer_name, truncate, t_start, tokenizer_fn)
-        if max_fut is not None:
-            known_max_doc = max_fut.result()
-            pool.shutdown(wait=False)
-        return _build_index_fused(
-            spark, df, index_path, builder, docs_per_block,
-            term_partitions, tokenizer_name, truncate, t_start,
-            tokenizer_fn, phases, known_max_doc=known_max_doc)
-
-    # staged (resumable) path: blocks are processed in checkpoint groups
-    # that commit independently. The per-group exchange uses exact
-    # round-robin block -> task placement (a raw hash exchange on
-    # block_id puts ~128 blocks into 32 partitions with balls-in-bins
-    # skew, heaviest task ~1.6x mean); the partition kernel then builds
-    # its complete blocks via mapInPandas — the old
-    # groupBy().applyInPandas here added a SECOND full text exchange
-    # (ENSURE_REQUIREMENTS hashpartitioning on block_id) that both
-    # doubled the shuffled bytes and re-introduced the skew the exact
-    # placement had just removed (guide §2.4; plans/r06/build_stage_*).
-    # The width is sized from the session's shuffle width (a
-    # DATA/cluster-sized config), NOT from core count: the same job on
-    # the same input must produce the same layout and do the same work
-    # at N and 4N executors (round-5 finding). A corpus with fewer
-    # blocks just leaves some partitions empty (cheap no-op tasks).
-    if stage_partitions is None:
-        # 2x the shuffle width: the stage is the CPU-heaviest phase, and
-        # finer tasks let dynamic scheduling absorb per-task variance
-        # (measured: 32 partitions beat 16 by ~9% wall at 8 cores on the
-        # 4M corpus, identical CPU)
-        stage_partitions = max(
-            2 * int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
-
-    stage_path = os.path.join(index_path, "stage")
-    marker_dir = os.path.join(index_path, "_groups")
-    os.makedirs(marker_dir, exist_ok=True)
-
+    # --- small-build gate, cheapest evidence first ---
+    # 1. plan-size estimate (no I/O): compressed input > 64 MB
+    #    already proves raw text > SMALL_BUILD_MAX_BYTES — big
+    #    corpora never run a single gate job.
+    # 2. input parquet footers (driver, footer bytes only): exact
+    #    row count upper bound + raw text bytes upper bound + (when
+    #    the plan has no Filter) the exact max doc_id — the common
+    #    "build from a parquet table" case decides the gate AND the
+    #    fused path's n_blocks with ZERO Spark jobs.
+    # 3. fallback probe jobs: an incremental take() of doc_id only
+    #    (CollectLimit answers after ~one split; no text pages are
+    #    decompressed), plus a bounded byte-sum job when small, with
+    #    the fused path's max(doc_id) agg overlapped on a thread
+    #    (guide §2.6).
+    # The driver-local build has no checkpoint groups, so a checkpointed
+    # or resumed build skips the gate.
+    t_p = time.time()
     groups = max(1, checkpoint_groups)
-    metrics_path = os.path.join(index_path, "metrics.jsonl")
-    stage_kernel = _make_partition_kernel(builder)
-    t_stage = time.time()
-    for g in range(groups):
-        marker = os.path.join(marker_dir, f"group_{g}_of_{groups}.done")
-        if resume and os.path.exists(marker):
-            continue
-        g_start = time.time()
-        part = df if groups == 1 else df.filter(F.pmod(F.col("block_id"), F.lit(groups)) == g)
-        # exchange AFTER the group filter, so each group job shuffles
-        # only its own blocks' text (the old pre-loop exchange re-ran
-        # for every group job over the full corpus)
-        part = repartition_exact(
-            part, F.pmod(F.col("block_id"), F.lit(int(stage_partitions))),
-            stage_partitions, range_fallback_cols=["block_id"])
-        staged = part.mapInPandas(stage_kernel, STAGE_SCHEMA)
-        # idempotent retry: each group owns a subdirectory and overwrites
-        # it, so a group that crashed after a partial/complete write is
-        # safely re-run on resume (no duplicate appends)
-        g_path = stage_path if groups == 1 else os.path.join(stage_path, f"group={g}")
-        staged.write.mode("overwrite").parquet(g_path)
-        g_secs = time.time() - g_start
-        # atomic commit: a crash mid-write must not leave a partial marker
-        with open(marker + ".tmp", "w") as fh:
-            json.dump({"group": g, "secs": g_secs}, fh)
-        os.replace(marker + ".tmp", marker)
-        with open(metrics_path, "a") as fh:
-            fh.write(json.dumps({
-                "stage": "build_group", "group": g,
-                "secs": round(g_secs, 3),
-            }) + "\n")
-
-    phases["stage"] = round(time.time() - t_stage, 3)
-
-    stage = spark.read.parquet(stage_path)
-    # block count from the staged data (column-pruned agg over the stage
-    # files — replaces the pre-stage full-corpus metadata scan)
-    t_p = time.time()
-    max_block = stage.agg(F.max("block_id")).collect()[0][0]
-    phases["max_block_agg"] = round(time.time() - t_p, 3)
-    n_blocks = int(max_block) + 1 if max_block is not None else 1
-    if term_partitions is None:
-        # target ~64 MB postings files: files smaller than Spark's
-        # maxPartitionBytes are never split across scan partitions, so
-        # every scan partition holds WHOLE doc blocks — the query side
-        # can then run phrase/slop kernels with zero shuffle (see
-        # SearchIndex._files_aligned)
-        stage_bytes = 0
-        for root, _, files in os.walk(stage_path):
-            stage_bytes += sum(os.path.getsize(os.path.join(root, f))
-                               for f in files if f.endswith(".parquet"))
-        term_partitions = max(4, spark.sparkContext.defaultParallelism,
-                              -(-stage_bytes // (64 << 20)))
-
-    # --- finalize: four independent jobs over the staged data, submitted
-    # concurrently (Spark schedules them together) so the serial tail of
-    # the build is one round, not four ---
-    granularity = bounds_granularity(n_blocks)
-    srg_flag = {}
-
-    def _write_postings():
-        # DOCUMENT-partitioned layout (block ranges), term-sorted within
-        # each file: a hot term's rows spread across EVERY file, so a
-        # single-term scan parallelizes across the cluster (term-range
-        # partitioning would put "the" in one file = one task), while
-        # the within-file term sort keeps parquet row-group min/max
-        # stats tight so pushed term filters still skip almost all data.
-        # Bytes are uniform per partition by construction (every block
-        # range holds the same term mix) — no hot-term write skew.
-        # ONE row group per file (verified) => a file's rows always land
-        # whole in one scan partition: the zero-shuffle phrase invariant.
-        srg_flag["postings"] = write_postings_table(
-            stage.filter(F.col("kind") == "p")
-                 .select("term", "block_id", "postings", "df", "tf_total",
-                         "tf_max", "dl_min"),
-            os.path.join(index_path, "postings"), term_partitions,
-            n_blocks=n_blocks)
-
-    def _write_doclens():
-        # same block-range partitioning as postings: the query kernel
-        # locates a block's doclens by file block-range (footer stats)
-        # and side-input-reads just that file — no broadcast above the
-        # small-corpus cap, no per-query doclens shuffle, ever
-        d = stage.filter(F.col("kind") == "d") \
-            .select("block_id", "doc_ids", "doc_lens")
-        if term_partitions <= PROBE_MAX_PARTITIONS:
-            # exact contiguous ranges, no range-sampling pass/job
-            fid = F.floor(F.col("block_id") * F.lit(int(term_partitions))
-                          / F.lit(int(max(n_blocks, 1))))
-            d = repartition_exact(d, fid, term_partitions)
+    est = _plan_size_estimate(df)
+    skip_gate = est > SMALL_BUILD_MAX_BYTES or groups > 1 or resume
+    footer = (None if skip_gate
+              else _scan_footer_stats(df, in_col,
+                                      doc_src_col=doc_id_col or "doc_id"))
+    max_doc = None
+    rows_maybe_small = True  # until proven otherwise
+    is_small: Optional[bool] = None
+    if skip_gate:
+        # checkpointed, or compressed input > cap => raw text > cap
+        is_small = False
+    elif footer is not None:
+        rows_ub, text_enc_bytes, footer_max = footer
+        if known_max_doc is None:
+            known_max_doc = footer_max  # may be None (filtered scan)
+        if rows_ub > SMALL_BUILD_MAX_DOCS:
+            is_small = False
+        elif (text_enc_bytes is not None
+                and text_enc_bytes > SMALL_BUILD_MAX_BYTES):
+            # encoded bytes already exceed the cap => raw does too.
+            # (The converse NEVER proves smallness: dictionary/RLE
+            # encoding can shrink the footer number by orders of
+            # magnitude below the decoded text.)
+            is_small = False
+        # else: row count small — raw byte cap still needs the
+        # bounded job below
+    max_fut = None
+    pool = None
+    if is_small is None:
+        from concurrent.futures import ThreadPoolExecutor
+        if known_max_doc is None:
+            pool = ThreadPoolExecutor(1)
+            max_fut = pool.submit(
+                lambda: df.agg(F.max("doc_id")).collect()[0][0])
+        if footer is None:
+            probe = df.select("doc_id").take(SMALL_BUILD_MAX_DOCS + 1)
+            rows_maybe_small = len(probe) <= SMALL_BUILD_MAX_DOCS
+            max_doc = (max((r["doc_id"] for r in probe), default=None)
+                       if rows_maybe_small else None)
+        if rows_maybe_small:
+            if tokens_col is None:
+                nb = F.octet_length("text")
+            else:
+                # pretokenized: per-doc size ~ token bytes + slack
+                nb = F.expr(
+                    "aggregate(text, 0L, (a, x) -> a + octet_length(x) + 8L)")
+            total_bytes = df.select(nb.alias("nb")) \
+                .limit(SMALL_BUILD_MAX_DOCS + 1) \
+                .agg(F.sum("nb")).collect()[0][0] or 0
+            is_small = total_bytes <= SMALL_BUILD_MAX_BYTES
         else:
-            d = d.repartitionByRange(term_partitions, "block_id")
-        d.sortWithinPartitions("block_id") \
-            .write.mode("overwrite") \
-            .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
-            .parquet(os.path.join(index_path, "doclens"))
-
-    def _write_term_stats():
-        # full term_partitions width: the gather stage is the sketch
-        # table's parallelism ceiling, and a narrow width (an old
-        # term_partitions // 4) capped it at 2 tasks in the 2-vs-8-core
-        # scaling protocol (measured 1.8x speedup on 4x cores). Width is
-        # still data-sized (same layout at any core count); the sketch
-        # files just get smaller.
-        write_term_stats(stage.filter(F.col("kind") == "p"),
-                         os.path.join(index_path, "term_stats"),
-                         term_partitions, granularity)
-
-    stats_schema = StructType([
-        StructField("n", LongType()), StructField("s", FloatType()),
-    ])
-
-    def _block_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for lens_raw in pdf["doc_lens"]:
-                lens = np.frombuffer(lens_raw, dtype="<f4")
-                yield pd.DataFrame({"n": [len(lens)], "s": [float(lens.sum())]})
-
-    def _corpus_stats():
-        return stage.filter(F.col("kind") == "d") \
-            .select("doc_lens").mapInPandas(_block_stats, stats_schema) \
-            .agg(F.sum("n").alias("num_docs"), F.sum("s").alias("total_tokens")) \
-            .withColumn("avg_doc_len",
-                        F.when(F.col("num_docs") > 0,
-                               F.col("total_tokens") / F.col("num_docs"))
-                        .otherwise(F.lit(0.0))) \
-            .collect()[0]
-
-    from concurrent.futures import ThreadPoolExecutor
-    t_p = time.time()
-    with ThreadPoolExecutor(4) as pool:
-        futs = [pool.submit(f) for f in
-                (_write_postings, _write_doclens, _write_term_stats)]
-        stats_fut = pool.submit(_corpus_stats)
-        for f in futs:
-            f.result()
-        stats = stats_fut.result()
-    phases["finalize4"] = round(time.time() - t_p, 3)
-
-    meta = {
-        # 3 = block-range-partitioned postings (zero-shuffle phrase path)
-        # 4 = + verified single-row-group postings files (sound alignment
-        #     predicate), per-term bound sketches, side-input doclens
-        "format_version": 4,
-        "tokenizer": tokenizer_name,
-        "docs_per_block": docs_per_block,
-        "truncate": truncate,
-        "num_docs": stats["num_docs"],
-        "avg_doc_len": stats["avg_doc_len"] or 0.0,
-        "total_tokens": stats["total_tokens"] or 0.0,
-        "bounds_granularity": granularity,
-        "postings_single_row_group": bool(srg_flag.get("postings", False)),
-        "build_secs": round(time.time() - t_start, 3),
-    }
-    with open(os.path.join(index_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-
-    def _table_bytes(name: str) -> int:
-        total = 0
-        for root, _, files in os.walk(os.path.join(index_path, name)):
-            total += sum(os.path.getsize(os.path.join(root, f))
-                         for f in files if f.endswith(".parquet"))
-        return total
-
-    with open(metrics_path, "a") as fh:
-        fh.write(json.dumps({
-            "stage": "finalize", "num_docs": meta["num_docs"],
-            "total_tokens": meta["total_tokens"],
-            "secs": meta["build_secs"],
-            "phases": phases,
-            "docs_per_sec": round(meta["num_docs"] / max(meta["build_secs"], 1e-9), 1),
-            "tokens_per_sec": round(
-                (meta["total_tokens"] or 0) / max(meta["build_secs"], 1e-9), 1),
-            # bytes shuffled ~= staged posting bytes (the one big exchange)
-            "stage_bytes": _table_bytes("stage"),
-            "postings_bytes": _table_bytes("postings"),
-            "doclens_bytes": _table_bytes("doclens"),
-            "term_stats_bytes": _table_bytes("term_stats"),
-        }) + "\n")
-    return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
+            is_small = False
+    phases["probe"] = round(time.time() - t_p, 3)
+    if is_small:
+        # driver-local fast path: identical layout, zero Spark jobs
+        # past this toPandas — update segments, streaming
+        # micro-batches, and toy benches skip the fixed scheduling
+        # overhead of distributed build jobs
+        pdf = df.select("doc_id", "text", "block_id").toPandas()
+        if max_doc is None:
+            max_doc = (int(pdf["doc_id"].max()) if len(pdf)
+                       else None)
+        n_blocks = (int(max_doc // docs_per_block) + 1
+                    if max_doc is not None else 1)
+        os.makedirs(index_path, exist_ok=True)
+        _uncommit(index_path, ("postings", "doclens", "term_stats"))
+        tp = term_partitions or max(
+            1, min(4, spark.sparkContext.defaultParallelism))
+        if pool is not None:
+            pool.shutdown(wait=False)
+        return _build_index_local(
+            spark, pdf, index_path, builder, docs_per_block, n_blocks, tp,
+            tokenizer_name, truncate, t_start, tokenizer_fn)
+    if max_fut is not None:
+        known_max_doc = max_fut.result()
+        pool.shutdown(wait=False)
+    return _build_index_fused(
+        spark, df, index_path, builder, docs_per_block,
+        term_partitions, tokenizer_name, truncate, t_start,
+        tokenizer_fn, phases, known_max_doc=known_max_doc,
+        groups=groups, resume=resume)
